@@ -305,11 +305,15 @@ object Bench {
     // subtotals (run-order chunks, same order as `families`), and the
     // geomean speedup vs the prior committed sidecar (same-SF per-query
     // minima — the round-over-round number the driver could not compute in
-    // r16). The original line and its methodology are unchanged.
+    // r16). It carries its own "metric":"total_summary", so a consumer that
+    // selects "metric":"total" still matches only the full line.
     val cpus = sys.env.get("SPARK_GRAFT_CPUS").flatMap(s =>
       scala.util.Try(s.trim.toInt).toOption)
       .getOrElse(spark.sparkContext.defaultParallelism)
-    val famSubtotals = families.zip(famResults).map { case (_, rs) =>
+    // sliced from the retry-merged `results` by the same index quotas as
+    // `families`, so the subtotals add up to total_sec
+    val famSubtotals = families.indices.map { i =>
+      val rs = results.slice(i * results.size / numFamilies, (i + 1) * results.size / numFamilies)
       f"${rs.collect { case r if r.err.isEmpty => r.best }.sum}%.3f"
     }.mkString("[", ",", "]")
     val priorCommon = results.collect {
@@ -320,7 +324,7 @@ object Bench {
       if (priorCommon.isEmpty) "null"
       else f"${math.exp(priorCommon.sum / priorCommon.size)}%.3f"
     println(
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","summary_line":true,"run_id":"$runId","cpus":$cpus,"sf":"$sfDir","total_sec":$total%.3f,"n":${results.size},"failed_n":${failed.size},"baseline43_sum":${baselinePresent.map(_.best).sum}%.3f,"load_index":$loadIndex%.2f,"load_shuffle_index":$loadShufIndex%.2f,"family_subtotals":$famSubtotals,"geomean_vs_prior_sidecar":$geoVsPrior,"n_prior_common":${priorCommon.size}}""")
+      f"""{"metric":"total_summary","value":$total%.3f,"unit":"sec","summary_line":true,"run_id":"$runId","cpus":$cpus,"sf":"$sfDir","total_sec":$total%.3f,"n":${results.size},"failed_n":${failed.size},"baseline43_sum":${baselinePresent.map(_.best).sum}%.3f,"load_index":$loadIndex%.2f,"load_shuffle_index":$loadShufIndex%.2f,"family_subtotals":$famSubtotals,"geomean_vs_prior_sidecar":$geoVsPrior,"n_prior_common":${priorCommon.size}}""")
     // untruncated sidecar: the driver's recorded bench tail clips the first
     // ~20 query entries, so every run also lands the full per-query JSON on
     // disk where it can be committed and ranked without estimation. The

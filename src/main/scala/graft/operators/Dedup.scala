@@ -634,139 +634,90 @@ object Dedup {
     * Barrier economics: the INITIAL labels already ARE round 1 — with the
     * self-loop folded into the edge set, round 1 over identity labels is
     * just min(dst) per src, a plain aggregation of the edge list needing
-    * no label join. Rounds run in STRIDES of 3 per job barrier, with the
-    * Σ label observed at EVERY round boundary inside the job
-    * ([[ckptRoundsWithSums]]) — so a graph that converges at round 1 (the
-    * common shallow near-dup case) is proven converged by the FIRST job,
-    * and no per-round precision is lost to the stride: any adjacent equal
-    * pair of sums is the fixpoint, and the rounds after it inside the
-    * stride are no-ops, never a wrong answer. A graph whose fixpoint lands
-    * exactly on `maxRounds` with the sum still in flight gets ONE extra
-    * confirming round before the guard throws (the sum can only prove
-    * convergence one round after it happens). An empty pair set
-    * short-circuits to the empty frame. */
+    * no label join. Rounds run as a [[Fixpoint]] loop in STRIDES of 2 per
+    * job barrier, with the Σ label observed at EVERY round boundary inside
+    * the job (an `Observation` riding the checkpoint materialization) — so
+    * a graph that converges at round 1 (the common shallow near-dup case)
+    * is proven converged by the FIRST job, and no per-round precision is
+    * lost to the stride: any adjacent equal pair of sums is the fixpoint,
+    * and the rounds after it inside the stride are no-ops, never a wrong
+    * answer. The round cap is `maxRounds` plus ONE confirming
+    * round, so a graph whose fixpoint lands exactly on `maxRounds` is not
+    * rejected (the sum can only prove convergence one round after it
+    * happens). An empty pair set short-circuits to the empty frame. */
   def dedupClusters(pairs: DataFrame, maxRounds: Int = 50): DataFrame = {
     require(maxRounds >= 1, "need at least one propagation round")
-    val stride = 3
     // referenced in every round of every stride — materialize the
     // self-looped edge set once instead of re-running its union+distinct
     // inside each propagation job
     val edges = ccEdges(pairs).localCheckpoint()
-    // one cheap count over the materialized blocks (the ckParts
-    // stated-honestly precedent) buys the per-round broadcast decision —
-    // labels ≤ |E| rows on the self-looped edge set — once, instead of
-    // AQE re-deriving it per stage per round ([[LoopPlan]], r16)
-    val labelEst = edges.count() * 24L
-    def out(l: DataFrame) = l.select(col("doc_id"), col("label").as("cluster_id"))
+    // one cheap count over the materialized blocks sizes the loop: labels
+    // ≤ |E| rows on the self-looped edge set
+    val nE = edges.count()
+    val loop = Fixpoint(edges.sparkSession, nE)
+    val sumExpr = sum(col("label").cast("decimal(38,0)")).as("label_sum")
+    def aggSum(l: DataFrame): java.math.BigDecimal = l.agg(sumExpr).head().getDecimal(0)
+    // an EMPTY labels frame can surface as a zero-field metrics row (the
+    // observe node never sees a partition) — read it as the null sum of
+    // the empty graph, not an index error (found by the r12 sparse fuzz)
+    def observedSums(s: CcLabels): Option[Vector[java.math.BigDecimal]] =
+      if (!checkpointDrivesObservation) None
+      else try Some(s.pending.map { case (_, o) =>
+        val row = scala.concurrent.Await.result(
+          o.future, scala.concurrent.duration.Duration(5, "seconds"))
+        if (row.length == 0) null else row.getDecimal(0)
+      }) catch {
+        case _: java.util.concurrent.TimeoutException =>
+          checkpointDrivesObservation = false
+          None
+      }
+    def checkpoint(s: CcLabels): CcLabels = {
+      val ck = s.labels.localCheckpoint()
+      val sums = observedSums(s).getOrElse(
+        s.pending.init.map(p => aggSum(p._1)) :+ aggSum(ck))
+      CcLabels(ck, sums, Vector.empty)
+    }
     // fixpoint proof: per-vertex labels are monotonically non-increasing,
     // so Σ label strictly decreases until the fixpoint and is constant at
     // it — ANY adjacent equal pair in the per-round sum sequence proves
     // convergence at that round, and every later round is a no-op, so the
     // stride-end checkpoint is the fixpoint frame even when convergence
-    // landed mid-stride
-    def fixAt(ss: Seq[java.math.BigDecimal]): Boolean =
-      ss.sliding(2).exists(p => p.length == 2 && p(0).compareTo(p(1)) == 0)
-    // round 1 for free: min over N(v) ∪ {v} of identity labels = min(dst).
-    // The first job runs rounds 1..2 with a sum observed at both
-    // boundaries — one barrier where init-then-stride paid two, and the
-    // SHORTEST job that can prove a fixpoint (two adjacent equal sums):
-    // near-dup graphs usually converge at round 1, so the common case
-    // pays init + one confirming round and stops. Deeper graphs continue
-    // in strides of `stride`.
+    // landed mid-stride. A null first sum is the empty graph.
+    def done(prev: CcLabels, cur: CcLabels): Boolean =
+      cur.sums.head == null || (prev.sums.takeRight(1) ++ cur.sums).sliding(2)
+        .exists(p => p.length == 2 && p(0).compareTo(p(1)) == 0)
+    // round 1 for free: min over N(v) ∪ {v} of identity labels = min(dst)
     val init = edges.groupBy(col("src")).agg(min(col("dst")).as("label"))
       .select(col("src").as("doc_id"), col("label"))
-    var round = math.min(2, maxRounds)
-    var (labels, sums) = ckptRoundsWithSums(edges, init, round - 1, labelEst)
-    if (sums.head == null) return out(labels) // no pairs → no vertices, sum of nothing
-    var converged = fixAt(sums)
-    var prevSum = sums.last
-    while (!converged && round < maxRounds) {
-      val steps = math.min(stride, maxRounds - round)
-      val (l2, ss) =
-        ckptRoundsWithSums(edges, ccRound(edges, labels, labelEst), steps - 1, labelEst)
-      labels = l2
-      converged = fixAt(prevSum +: ss)
-      prevSum = ss.last
-      round += steps
-    }
-    if (!converged) {
-      // the cap may coincide with the fixpoint itself: one confirming
-      // round distinguishes "converged at exactly maxRounds" from "still
-      // descending" (labels are unchanged by the extra round if converged)
-      val (l2, ss) =
-        ckptRoundsWithSums(edges, ccRound(edges, labels, labelEst), 0, labelEst)
-      labels = l2
-      converged = ss.head.compareTo(prevSum) == 0
-    }
-    if (!converged)
-      throw new IllegalStateException(
+    // stride 2, MEASURED against 3 (perfbench batch_queries, sf0.01, two
+    // seeds): q_dedup_clusters converges at round 1, and its 3-round first
+    // job ran 0.71 s against 0.45–0.55 s — each unhinted one-partition
+    // round re-shuffles the edges into a sort-merge join, so rounds past
+    // the proof cost more than the barrier a longer stride saves
+    val stride = if (checkpointDrivesObservation) 2 else 1
+    loop.converge(CcLabels(init, Vector.empty, Vector.empty), maxRounds + 1, stride)(
+        checkpoint, done,
         s"dedupClusters: min-label propagation not converged after $maxRounds rounds " +
-          "— raise maxRounds (a component's diameter exceeds the cap)")
-    labels.select(col("doc_id"), col("label").as("cluster_id"))
+          "— raise maxRounds (a component's diameter exceeds the cap)") { (s, r) =>
+      val next = if (r == 1) s.labels else ccRound(edges, s.labels, loop.hint(_, nE * 24L))
+      val o = org.apache.spark.sql.Observation()
+      val observed = next.observe(o, sumExpr)
+      s.copy(labels = observed, pending = s.pending :+ (observed -> o))
+    }.labels.select(col("doc_id"), col("label").as("cluster_id"))
   }
 
-  /** Materialize `first` plus `extra` further propagation rounds in ONE
-    * job, returning the checkpointed final labels and the decimal Σ label
-    * observed at every round boundary (`extra + 1` sums): the sums ride
-    * the checkpoint materialization as observed metrics, so a whole stride
-    * costs a single job barrier instead of checkpoint-then-aggregate per
-    * round. If the checkpoint action ever stops driving the metrics
-    * listener (observed: it does today), the helper falls back to an
-    * explicit checkpoint + aggregate per round and remembers the failure
-    * so the bounded wait is paid at most once per JVM. Sums are null for
-    * an empty frame — the caller's empty-graph signal. */
+  /** [[dedupClusters]]' loop state: the labels, the Σ label at each round
+    * boundary of the last checkpointed stride, and the rounds built since
+    * that checkpoint with the observations their sums arrive on. */
+  private final case class CcLabels(labels: DataFrame,
+                                    sums: Vector[java.math.BigDecimal],
+                                    pending: Vector[(DataFrame, org.apache.spark.sql.Observation)])
+
+  /** Whether a checkpoint action drives the observed-metrics listener. If it
+    * ever stops doing so (observed: it does today), [[dedupClusters]] falls
+    * back to an explicit checkpoint + aggregate per round and remembers the
+    * failure, so the bounded wait is paid at most once per JVM. */
   @volatile private[graft] var checkpointDrivesObservation = true
-  private def ckptRoundsWithSums(edges: DataFrame, first: DataFrame, extra: Int,
-                                 labelEst: Long = Long.MaxValue)
-      : (DataFrame, Seq[java.math.BigDecimal]) = {
-    val sumExpr = sum(col("label").cast("decimal(38,0)")).as("label_sum")
-    // static loop planning ([[LoopPlan]], r16): the stride's joins carry
-    // the measured-size broadcast decision, so AQE's per-exchange stage
-    // jobs inside each materialization are pure driver latency; loop
-    // exchanges pinned to the measured label-frame partition count (r17)
-    LoopPlan.statically(edges.sparkSession,
-        LoopPlan.pinnedPartsForRows(edges.sparkSession, labelEst / 24L)) {
-    // result computed into a val, never `return`ed: a non-local return
-    // from a by-name block compiles to NonLocalReturnControl, which any
-    // future catch clause in `statically` (or running the body off-thread)
-    // would silently swallow (r16 advisory)
-    val viaObservation: Option[(DataFrame, Seq[java.math.BigDecimal])] =
-      if (!checkpointDrivesObservation) None
-      else {
-        val obses = Vector.fill(extra + 1)(org.apache.spark.sql.Observation())
-        var df = first.observe(obses(0), sumExpr)
-        for (i <- 1 to extra) df = ccRound(edges, df, labelEst).observe(obses(i), sumExpr)
-        val ckpt = df.localCheckpoint()
-        try {
-          // an EMPTY labels frame can surface as a zero-field metrics row
-          // (the observe node never sees a partition) — read it as the null
-          // sum the caller treats as the empty-graph signal, not an index
-          // error (found by the r12 sparse fuzz variant)
-          val sums = obses.map { o =>
-            val row = scala.concurrent.Await.result(
-              o.future, scala.concurrent.duration.Duration(5, "seconds"))
-            if (row.length == 0) null else row.getDecimal(0)
-          }
-          Some((ckpt, sums))
-        } catch {
-          case _: java.util.concurrent.TimeoutException =>
-            checkpointDrivesObservation = false // fall through to explicit path
-            None
-        }
-      }
-    viaObservation.getOrElse {
-      def aggSum(l: DataFrame): java.math.BigDecimal =
-        l.agg(sum(col("label").cast("decimal(38,0)"))).head().getDecimal(0)
-      var l = first.localCheckpoint()
-      val sums = Vector.newBuilder[java.math.BigDecimal]
-      sums += aggSum(l)
-      for (_ <- 1 to extra) {
-        l = ccRound(edges, l, labelEst).localCheckpoint(); sums += aggSum(l)
-      }
-      (l, sums.result())
-    }
-    } // LoopPlan.statically
-  }
 
   /** Fixed-round variant of [[dedupClusters]] — `rounds` synchronous
     * min-label rounds with NO convergence guard, labels left mid-flight if
@@ -837,10 +788,9 @@ object Dedup {
     var n = edges.count()
     // per-round min-frame broadcast decided from the MEASURED surviving
     // edge count (mins ≤ 2n rows; the count is the termination check the
-    // loop already pays) — see [[LoopPlan]]; oversize graphs keep the
-    // unhinted shuffle join
+    // loop already pays); oversize graphs keep the unhinted shuffle join
     def minsB(df: DataFrame): DataFrame =
-      LoopPlan.broadcastIfSmall(df, 2L * n * 24L)
+      Fixpoint.broadcastIfSmall(df, 2L * n * 24L)
     def largeStar(e: DataFrame): DataFrame = {
       val sym = e.select(col("hi").as("u"), col("lo").as("v"))
         .union(e.select(col("lo").as("u"), col("hi").as("v")))
@@ -858,7 +808,7 @@ object Dedup {
     }
     var converged = n == 0L
     var round = 0
-    // measured-size broadcast hints only, NOT LoopPlan.statically (r16
+    // measured-size broadcast hints only, NOT a [[Fixpoint]] loop (r16
     // A/B: static planning ran this loop SLOWER, 2.48 vs 1.82 s — the
     // star rewrites' distinct/union shuffles profit from AQE coalescing
     // the way the BPE train does, unlike the pure Pregel loops)
@@ -984,28 +934,15 @@ object Dedup {
   }
 
   /** One synchronous min-label round: min over N(v) ∪ {v} via the
-    * self-looped edge set. */
-  /** `labelEstBytes`: measured size bound for the label frame (|V| ≤ |E|
-    * on the self-looped edge set) — lets [[LoopPlan.broadcastIfSmall]]
-    * make the broadcast decision once per loop instead of AQE re-deriving
-    * it per stage per round; `Long.MaxValue` (the test-anchor fixed-rounds
-    * path) never hints. */
+    * self-looped edge set. `hint` is the loop's broadcast decision for the
+    * label frame ([[Fixpoint.hint]]); the test-anchor fixed-rounds path
+    * never hints. */
   private def ccRound(edges: DataFrame, labels: DataFrame,
-                      labelEstBytes: Long = Long.MaxValue): DataFrame = {
-    val labelSide = labels.select(col("doc_id").as("dst"), col("label"))
-    // pin==1 (the same measured-rows rule the statically site pins the
-    // loop's shuffle partitions with): skip the broadcast hint —
-    // SinglePartition joins run in-stage, saving the per-round
-    // broadcast-build job (r17)
-    val hinted =
-      if (LoopPlan.pinnedPartsForRows(edges.sparkSession, labelEstBytes / 24L)
-            .contains(1)) labelSide
-      else LoopPlan.broadcastIfSmall(labelSide, labelEstBytes)
+                      hint: DataFrame => DataFrame = identity): DataFrame =
     edges
-      .join(hinted, Seq("dst"))
+      .join(hint(labels.select(col("doc_id").as("dst"), col("label"))), Seq("dst"))
       .groupBy(col("src")).agg(min(col("label")).as("label"))
       .select(col("src").as("doc_id"), col("label"))
-  }
 
   // ---------------------------------------------------------------- simhash
 

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Weighted PageRank in fixed-point integer arithmetic — the iterative
@@ -27,26 +27,6 @@ import org.apache.spark.sql.functions._
   * survivor selection over the near-dup graph).
   */
 object GraphRank {
-
-  /** Rows per partition for the bounded checkpoint frames the fixpoint
-    * loops re-materialize every round. Their partition count is a
-    * per-round task-scheduling cost, so it is DERIVED from the measured
-    * frame size — clamped to `defaultParallelism` — instead of pinned
-    * (r13 verdict: a pinned `coalesce(1)` on an unbounded vertex set
-    * would be a single-task choke at 100 TB, while the catalog-bounded
-    * graphs these typically run on still collapse to one task and keep
-    * the driver-latency win on the 16–37-job fixpoints). The PageRank
-    * variants and HITS fold the |E| read into the overflow-guard action
-    * they already pay (free); BFS, LPA and the Markov chain pay one NEW
-    * bounded count over the just-checkpointed (cached) frame — one cheap
-    * job against the 6–16 per-round jobs whose task counts it sizes
-    * (r14 self-review: stated honestly rather than claimed free). */
-  private val RowsPerCheckpointPart = 65536L
-
-  private def ckParts(spark: SparkSession, rows: Long): Int = {
-    val want = (rows.max(0L) + RowsPerCheckpointPart - 1) / RowsPerCheckpointPart
-    want.max(1L).min(spark.sparkContext.defaultParallelism.toLong).toInt
-  }
 
   /** Ranks over an undirected weighted edge list `(item_a, item_b, pairs)`
     * (as produced by [[EventAnalytics.cooccurrenceCounts]]): each edge
@@ -90,7 +70,7 @@ object GraphRank {
     // bounded frames also coalesce before checkpointing: a 100-node rank
     // table spread over 32 shuffle partitions costs a 32-task job per
     // round for nothing — partition counts follow the MEASURED |E|
-    // (see [[ckParts]]), not the session's shuffle default
+    // (see [[Fixpoint]]), not the session's shuffle default
     val outEdgesCk = dir.join(strength, "src").localCheckpoint()
     // Overflow headroom (same doctrine as Sampling.systematicWeighted's
     // documented bound): the per-edge contribution `rank * w` reaches
@@ -110,74 +90,39 @@ object GraphRank {
       s"weightedPageRank: scale=$scale x max edge weight=$maxW can overflow " +
         "Long in the per-edge contribution (rank*w); pass a smaller scale " +
         s"(need scale <= ${Long.MaxValue / maxW})")
-    val p = ckParts(edges.sparkSession, nE)
-    val outEdges = outEdgesCk.coalesce(p)
-    val baseCk = base.coalesce(p).localCheckpoint()
-    var rank = baseCk.select(col("node"), col("rank0").as("rank")).localCheckpoint()
-    // checkpoint on a stride: each materialization is a full job round-trip
-    // (~fixed driver latency at bounded |V|), and a 2-round plan over
-    // checkpointed inputs is still shallow — same trick as the clustering
-    // fixpoint's stride-3 (`Dedup.scala`)
-    iterateRanks(outEdges, baseCk, rank, iterations, scoreEstBytes = nE * 24L,
-      parts = p)
+    val loop = Fixpoint(edges.sparkSession, nE)
+    val outEdges = outEdgesCk.coalesce(loop.parts)
+    val baseCk = base.coalesce(loop.parts).localCheckpoint()
+    val rank = baseCk.select(col("node"), col("rank0").as("rank")).localCheckpoint()
+    iterateRanks(loop, outEdges, baseCk, rank, iterations, scoreEstBytes = nE * 24L)
   }
 
   /** The shared fixed-point loop: one equi-join + one agg per round over a
     * (node, teleport) base frame — the teleport column is what
-    * distinguishes uniform PageRank from the personalized variant.
-    *
-    * The per-round joins carry NO broadcast hint (the [[labelPropagation]]
-    * doctrine, extended here in r13): the rank/contribution frames are |V|
-    * rows — vocabulary-bounded on this corpus, so AQE broadcasts them from
-    * their measured size — but |V| is not structurally bounded, and at a
-    * ~10⁸-node graph a pinned broadcast would OOM the executors where the
-    * unhinted plan degrades gracefully to a shuffle-hash join on the node
-    * id. */
-  private def iterateRanks(outEdges: DataFrame, baseCk: DataFrame,
+    * distinguishes uniform PageRank from the personalized variant. The
+    * rank-frame broadcast is decided from the measured |E| (|V| ≤ |E| here:
+    * every node has an out-edge by construction), so an unbounded vertex
+    * set degrades to a shuffle-hash join on the node id instead of a pinned
+    * broadcast that would OOM the executors (r13). */
+  private def iterateRanks(loop: Fixpoint, outEdges: DataFrame, baseCk: DataFrame,
                            rank0: DataFrame, iterations: Int,
-                           scoreEstBytes: Long, parts: Int): DataFrame = {
-    // loop planning (see [[LoopPlan]], r16): static planning per round —
-    // AQE's per-exchange query-stage jobs dominated these loops' wall at
-    // sub-second task time — with the rank-frame broadcast decided ONCE
-    // from the measured |E| (|V| ≤ |E| here: every node has an out-edge
-    // by construction) instead of re-estimated per stage per round.
-    // Oversize graphs keep the unhinted shuffle join on ckParts-sized
-    // partitions, exactly the degradation the old AQE path provided.
-    // loop exchanges pinned to the measured ckParts count (r17): static
-    // planning left them at the session default, re-fanning every tiny
-    // contribution agg to 32 tasks; big graphs pass None (conf untouched)
-    val pin = LoopPlan.pinnedParts(outEdges.sparkSession, parts)
-    // single-partition loops skip the broadcast hint outright (r17): with
-    // both join sides SinglePartition the join runs in-stage with NO
-    // exchange, where a forced broadcast costs a build JOB per round — the
-    // dominant driver latency of this loop (q_centrality_survivors: 0.45 s
-    // task time under 50 jobs). Multi-partition loops keep the measured
-    // broadcast decision exactly as in r16.
-    def scoreB(df: DataFrame): DataFrame =
-      if (pin.contains(1)) df else LoopPlan.broadcastIfSmall(df, scoreEstBytes)
-    LoopPlan.statically(outEdges.sparkSession, pin) {
-      var rank = rank0
-      for (i <- 1 to iterations) {
-        val contribs = outEdges
-          .join(scoreB(rank.withColumnRenamed("node", "src")), "src")
-          .select(col("dst").as("node"), expr("(rank * w) div s").as("c"))
-          .groupBy(col("node")).agg(sum(col("c")).as("in_mass"))
-        val next = baseCk
-          .join(scoreB(contribs), Seq("node"), "left")
-          .select(col("node"),
-            expr("teleport + (85L * coalesce(in_mass, 0L)) div 100L").as("rank"))
-        // stride 2, MEASURED against stride 4 (r16, warm same-JVM reps at
-        // sf0.1): stride 4 ran q_entity_pagerank 1.68 → 2.32 s and
-        // q_personalized_pagerank 1.68 → 2.33 s median — on these
-        // CORPUS-sized rank frames the deeper unmaterialized plan costs
-        // more than the saved checkpoint barriers, the opposite of the BPE
-        // and Markov results (whose per-round frames are vocabulary-/
-        // |types|-sized). Stride choice is frame-size-dependent.
-        rank = if (i % 2 == 0 || i == iterations) next.localCheckpoint() else next
-      }
-      rank
+                           scoreEstBytes: Long): DataFrame =
+    // stride 2, MEASURED against stride 4 (r16, warm same-JVM reps at
+    // sf0.1): stride 4 ran q_entity_pagerank 1.68 → 2.32 s and
+    // q_personalized_pagerank 1.68 → 2.33 s median — on these CORPUS-sized
+    // rank frames the deeper unmaterialized plan costs more than the saved
+    // checkpoint barriers, the opposite of the BPE and Markov results
+    // (whose per-round frames are vocabulary-/|types|-sized)
+    loop.run(rank0, iterations, stride = 2)(_.localCheckpoint()) { (rank, _) =>
+      val contribs = outEdges
+        .join(loop.hint(rank.withColumnRenamed("node", "src"), scoreEstBytes), "src")
+        .select(col("dst").as("node"), expr("(rank * w) div s").as("c"))
+        .groupBy(col("node")).agg(sum(col("c")).as("in_mass"))
+      baseCk
+        .join(loop.hint(contribs, scoreEstBytes), Seq("node"), "left")
+        .select(col("node"),
+          expr("teleport + (85L * coalesce(in_mass, 0L)) div 100L").as("rank"))
     }
-  }
 
   /** Personalized PageRank: teleport mass flows ONLY to a seed set (here
     * the `seeds` strongest entities, the [[bfsDistances]] seed rule), so
@@ -212,17 +157,17 @@ object GraphRank {
     // null max = empty edge frame (a legal input: a sparse corpus can have
     // zero verified pairs — r12 sparse fuzz); 0 passes the guard and the
     // loop then runs over empty frames to an empty rank table; the same
-    // action reads |E| to size the loop frames' coalesce ([[ckParts]])
+    // action reads |E| to size the loop frames' coalesce ([[Fixpoint]])
     val head = outEdgesCk.agg(count(lit(1)), max(col("w"))).head()
     val maxW = Option(head.getAs[java.lang.Long](1)).map(_.longValue).getOrElse(0L)
     require(maxW <= 0L || maxW <= Long.MaxValue / scale,
       s"personalizedPageRank: scale=$scale x max edge weight=$maxW can overflow Long")
-    val p = ckParts(edges.sparkSession, head.getLong(0))
-    val outEdges = outEdgesCk.coalesce(p)
-    val baseCk = base.coalesce(p).localCheckpoint()
+    val loop = Fixpoint(edges.sparkSession, head.getLong(0))
+    val outEdges = outEdgesCk.coalesce(loop.parts)
+    val baseCk = base.coalesce(loop.parts).localCheckpoint()
     val rank = baseCk.select(col("node"), col("rank0").as("rank")).localCheckpoint()
-    iterateRanks(outEdges, baseCk, rank, iterations,
-        scoreEstBytes = head.getLong(0) * 24L, parts = p)
+    iterateRanks(loop, outEdges, baseCk, rank, iterations,
+        scoreEstBytes = head.getLong(0) * 24L)
       .orderBy(col("rank").desc, col("node").asc).limit(k)
   }
 
@@ -265,35 +210,23 @@ object GraphRank {
     val seedDF = strength.orderBy(col("s").desc, col("src").asc).limit(seeds)
       .select(col("src").as("node"))
     // propagation graph: (src, dst) only — w already folded into seed
-    // choice; the checkpointed frame's count sizes every loop coalesce
+    // choice; the checkpointed frame's count sizes the loop
     val edgesCk0 = dir.select(col("src"), col("dst")).localCheckpoint()
-    val nEdges0 = edgesCk0.count()
-    val p = ckParts(edges.sparkSession, nEdges0)
-    val edgesCk = edgesCk0.coalesce(p)
+    val nEdges = edgesCk0.count()
+    val loop = Fixpoint(edges.sparkSession, nEdges)
+    val edgesCk = edgesCk0.coalesce(loop.parts)
     // the seed frame is limit(seeds) rows — structurally bounded, so a
     // single partition is exact, not a pinned guess
-    var best = seedDF.select(col("node"), col("node").as("packed"))
+    val seeded = seedDF.select(col("node"), col("node").as("packed"))
       .coalesce(1).localCheckpoint()
-    // static loop planning ([[LoopPlan]], r16): reached ≤ |V| ≤ 2|E|, so
-    // the label broadcast is decided once from the measured edge count;
-    // oversize graphs keep the unhinted shuffle join (the degradation AQE
-    // provided, minus its per-round stage-job latency)
-    val nEdges = nEdges0
-    val pin = LoopPlan.pinnedParts(edges.sparkSession, p)
-    // pin==1: skip the label broadcast hint — SinglePartition joins run
-    // in-stage, saving the per-hop broadcast-build job (r17)
-    def labelB(df: DataFrame): DataFrame =
-      if (pin.contains(1)) df
-      else LoopPlan.broadcastIfSmall(df, 2L * nEdges * 24L)
-    LoopPlan.statically(edges.sparkSession, pin) {
-      for (i <- 1 to hops) {
+    // reached ≤ |V| ≤ 2|E|: the label-frame estimate
+    val best = loop.run(seeded, hops, stride = 2)(_.coalesce(loop.parts).localCheckpoint()) {
+      (cur, _) =>
         val prop = edgesCk
-          .join(labelB(best.withColumnRenamed("node", "src")), "src")
+          .join(loop.hint(cur.withColumnRenamed("node", "src"), 2L * nEdges * 24L), "src")
           .select(col("dst").as("node"), (col("packed") + Pack).as("packed"))
-        val next = best.union(prop)
+        cur.union(prop)
           .groupBy(col("node")).agg(min(col("packed")).as("packed"))
-        best = if (i % 2 == 0 || i == hops) next.coalesce(p).localCheckpoint() else next
-      }
     }
     strength.select(col("src").as("node"))
       .join(best, Seq("node"), "left")
@@ -338,8 +271,10 @@ object GraphRank {
       .select(col(aCol).cast("long").as("a"), col(bCol).cast("long").as("b"))
       .where(col("a") =!= col("b"))
       .localCheckpoint()
-    var e = base
-    var n = e.count()
+    // state: the surviving edges and their count n — the count each round
+    // already pays for the termination check, which also sizes the
+    // keep-set broadcast (nodes ≤ 2n)
+    var core = (base, base.count())
     // CUMULATIVE round budget across the nested chain: the flat (from-base)
     // k-peel the oracle unrolls converges within the SUM of nested rounds
     // up to k (P_k is monotone and P_k(A) ⊆ P_j(A) for j ≤ k, so by
@@ -347,38 +282,28 @@ object GraphRank {
     // guarding the cumulative count ≤ maxRounds is exactly what makes
     // "oracle unrolled-maxRounds per k = fixpoint = engine" sound.
     var cumRounds = 0
-    // static loop planning ([[LoopPlan]], r16): the keep-set broadcast is
-    // decided per round from the MEASURED surviving edge count n (the
-    // count each round already pays for the termination check — nodes ≤
-    // 2n); an oversize core keeps the unhinted shuffle semi-joins
-    // pin==1: skip the keep-set broadcast hint — SinglePartition semi-joins
-    // run in-stage, saving the per-round broadcast-build job (r17)
-    val pin = LoopPlan.pinnedParts(spark, ckParts(spark, n))
-    val rows = LoopPlan.statically(spark, pin) { ks.sorted.map { k =>
-      var converged = n == 0L
-      while (!converged && cumRounds < maxRounds) {
-        val deg = e.select(col("a").as("node")).unionAll(e.select(col("b").as("node")))
-          .groupBy(col("node")).agg(count(lit(1)).as("d"))
-        val keep0 = deg.where(col("d") >= k).select(col("node"))
-        val keep =
-          if (pin.contains(1)) keep0
-          else LoopPlan.broadcastIfSmall(keep0, 2L * n * 16L)
-        // checkpoint-then-count, NOT an observed metric (r17, measured):
-        // riding the count on the checkpoint as an Observation (the
-        // ckptRoundsWithSums pattern) cut 7 jobs but was wall-flat in the
-        // quiet window (1.93 vs 1.97 s) and adds one listener-bus await
-        // PER ROUND — under host load the driver's only cross-run data
-        // point ran 1.46× slower normalized, so the plain count's
-        // job-result read wins on robustness.
-        val e2 = e.join(keep.select(col("node").as("a")), Seq("a"), "left_semi")
-          .join(keep.select(col("node").as("b")), Seq("b"), "left_semi")
-          .localCheckpoint()
-        val n2 = e2.count()
-        converged = n2 == n
-        e = e2; n = n2; cumRounds += 1
+    val loop = Fixpoint(spark, core._2)
+    val rows = loop.scope { ks.sorted.map { k =>
+      // checkpoint-then-count, NOT an observed metric (r17, measured):
+      // riding the count on the checkpoint as an Observation (the
+      // dedupClusters pattern) cut 7 jobs but was wall-flat in the quiet
+      // window (1.93 vs 1.97 s) and adds one listener-bus await PER ROUND
+      // — the only cross-run data point under host load ran 1.46× slower
+      // normalized, so the plain count's job-result read wins on
+      // robustness.
+      if (core._2 > 0L) core = loop.converge(core, maxRounds - cumRounds, stride = 1)(
+          { case (e, _) => val ck = e.localCheckpoint(); (ck, ck.count()) },
+          (prev, cur) => cur._2 == prev._2,
+          s"k-core peel (k=$k) did not converge within $maxRounds cumulative rounds") {
+        case ((e, n), _) =>
+          cumRounds += 1
+          val deg = e.select(col("a").as("node")).unionAll(e.select(col("b").as("node")))
+            .groupBy(col("node")).agg(count(lit(1)).as("d"))
+          val keep = loop.hint(deg.where(col("d") >= k).select(col("node")), 2L * n * 16L)
+          (e.join(keep.select(col("node").as("a")), Seq("a"), "left_semi")
+            .join(keep.select(col("node").as("b")), Seq("b"), "left_semi"), n)
       }
-      require(converged, s"k-core peel (k=$k) did not converge within " +
-        s"$maxRounds cumulative rounds")
+      val (e, n) = core
       val nodes = e.select(col("a").as("node")).unionAll(e.select(col("b").as("node")))
         .distinct().count()
       (k.toLong, nodes, n)
@@ -410,13 +335,13 @@ object GraphRank {
     * joins, linear in |E| per round, no driver-side graph. Output is the
     * community census (label, size, min/max member).
     *
-    * The per-round label join carries NO broadcast hint: the label frame
-    * is |V| rows — the entity catalog here (~10⁴ at any SF of this
-    * corpus), so AQE broadcasts it from its measured size — but |V| is
-    * NOT structurally bounded the way [[markovStationary]]'s |types|²
-    * frame is, and at a ~10⁸-item catalog a pinned broadcast would OOM
-    * the executors where the unhinted plan degrades gracefully to a
-    * shuffle join on `src`. */
+    * The per-round label join is broadcast only when the measured |E|
+    * says the |V|-row label frame is small ([[Fixpoint]]): |V| is the
+    * entity catalog here (~10⁴ at any SF of this corpus), but it is NOT
+    * structurally bounded the way [[markovStationary]]'s |types|² frame
+    * is, and at a ~10⁸-item catalog a pinned broadcast would OOM the
+    * executors where the unhinted plan degrades gracefully to a shuffle
+    * join on `src`. */
   def labelPropagation(edges: DataFrame, rounds: Int = 6): DataFrame = {
     require(rounds >= 1)
     val dir0 = edges.select(col("item_a").cast("long").as("src"),
@@ -425,35 +350,23 @@ object GraphRank {
         .select(col("item_b").cast("long").as("src"),
           col("item_a").cast("long").as("dst"), col("pairs").cast("long").as("w")))
       .localCheckpoint()
-    // |E| count off the cached blocks sizes every loop frame ([[ckParts]])
+    // |E| count off the cached blocks sizes every loop frame ([[Fixpoint]])
     val nE = dir0.count()
-    val p = ckParts(edges.sparkSession, nE)
-    val dir = dir0.coalesce(p)
-    var lab = dir.select(col("src").as("node")).distinct()
+    val loop = Fixpoint(edges.sparkSession, nE)
+    val dir = dir0.coalesce(loop.parts)
+    val lab0 = dir.select(col("src").as("node")).distinct()
       .select(col("node"), col("node").as("label"))
-      .coalesce(p).localCheckpoint()
-    // static loop planning ([[LoopPlan]], r16): label-frame broadcast
-    // decided once from the measured |E| (|V| ≤ |E|) instead of AQE
-    // re-deriving it per stage per round; oversize graphs keep the
-    // unhinted shuffle join — the same degradation AQE provided
-    val pin = LoopPlan.pinnedParts(edges.sparkSession, p)
-    // pin==1: skip the label broadcast hint — SinglePartition joins run
-    // in-stage, saving the per-round broadcast-build job (r17)
-    def labelB(df: DataFrame): DataFrame =
-      if (pin.contains(1)) df else LoopPlan.broadcastIfSmall(df, nE * 24L)
-    LoopPlan.statically(edges.sparkSession, pin) {
-      for (i <- 1 to rounds) {
-        val votes = dir
-          .join(labelB(lab.withColumnRenamed("node", "src")), "src")
+      .coalesce(loop.parts).localCheckpoint()
+    val w = org.apache.spark.sql.expressions.Window.partitionBy(col("node"))
+      .orderBy(col("v").desc, col("label").asc)
+    // label frame ≤ |V| ≤ |E| rows
+    val lab = loop.run(lab0, rounds, stride = 2)(_.coalesce(loop.parts).localCheckpoint()) {
+      (cur, _) =>
+        dir.join(loop.hint(cur.withColumnRenamed("node", "src"), nE * 24L), "src")
           .groupBy(col("dst").as("node"), col("label"))
           .agg(sum(col("w")).as("v"))
-        val w = org.apache.spark.sql.expressions.Window.partitionBy(col("node"))
-          .orderBy(col("v").desc, col("label").asc)
-        val next = votes.withColumn("rn", row_number().over(w))
+          .withColumn("rn", row_number().over(w))
           .where(col("rn") === 1).select(col("node"), col("label"))
-        lab = if (i % 2 == 0 || i == rounds) next.coalesce(p).localCheckpoint()
-          else next
-      }
     }
     lab.groupBy(col("label"))
       .agg(count(lit(1)).as("nodes"), min(col("node")).as("min_node"),
@@ -496,8 +409,8 @@ object GraphRank {
       .localCheckpoint()
     // the transition frame is ≤ |types|² rows — structurally bounded by
     // the event-type catalog — but its coalesce is still derived from the
-    // measured count ([[ckParts]]), same rule as the unbounded graphs
-    val p = ckParts(events.sparkSession, trans.count())
+    // measured count ([[Fixpoint]]), same rule as the unbounded graphs
+    val loop = Fixpoint(events.sparkSession, trans.count())
     val states = trans.select(col("src").as("state"))
       .union(trans.select(col("dst").as("state"))).distinct()
     val strength = trans.groupBy(col("src")).agg(sum(col("w")).as("s"))
@@ -510,33 +423,23 @@ object GraphRank {
       .select(col("state"),
         lit((15L * (scale / k)) / 100L).as("teleport"),
         lit(scale / k).as("rank0"))
-      .coalesce(p).localCheckpoint()
-    val out = trans.join(strength, "src").coalesce(p).localCheckpoint()
-    var rank = base.select(col("state"), col("rank0").as("rank")).localCheckpoint()
-    // static loop planning ([[LoopPlan]], r16): the broadcasts are already
-    // explicit (|types|²-bounded frames), so AQE's per-exchange stage jobs
-    // bought nothing — measured 56 driver jobs for 0.7 s of task time
-    val pin = LoopPlan.pinnedParts(events.sparkSession, p)
-    // pin==1: skip the |types|²-bounded broadcast hints — SinglePartition
-    // joins run in-stage, saving the per-round broadcast-build job (r17)
-    def typeB(df: DataFrame): DataFrame =
-      if (pin.contains(1)) df else broadcast(df)
-    LoopPlan.statically(events.sparkSession, pin) {
-      for (i <- 1 to iterations) {
-        val contribs = out
-          .join(typeB(rank.withColumnRenamed("state", "src")), "src")
-          .select(col("dst").as("state"), expr("(rank * w) div s").as("c"))
-          .groupBy(col("state")).agg(sum(col("c")).as("in_mass"))
-        val next = base
-          .join(typeB(contribs), Seq("state"), "left")
-          .select(col("state"),
-            expr("teleport + (85L * coalesce(in_mass, 0L)) div 100L").as("rank"))
-        // stride-4 checkpointing: the |types|-row frames make each round's
-        // plan trivially cheap to recompute, so the driver round-trips of a
-        // materialization dominate — fewer, deeper checkpoints win here
-        // (unlike the corpus-sized PageRank frames at stride 2)
-        rank = if (i % 4 == 0 || i == iterations) next.localCheckpoint() else next
-      }
+      .coalesce(loop.parts).localCheckpoint()
+    val out = trans.join(strength, "src").coalesce(loop.parts).localCheckpoint()
+    val rank0 = base.select(col("state"), col("rank0").as("rank")).localCheckpoint()
+    // stride-4 checkpointing: the |types|-row frames make each round's plan
+    // trivially cheap to recompute, so the job round-trips of a
+    // materialization dominate — fewer, deeper checkpoints win here (unlike
+    // the corpus-sized PageRank frames at stride 2). The rank and
+    // contribution frames hold ≤ k rows.
+    val rank = loop.run(rank0, iterations, stride = 4)(_.localCheckpoint()) { (cur, _) =>
+      val contribs = out
+        .join(loop.hint(cur.withColumnRenamed("state", "src"), k * 24L), "src")
+        .select(col("dst").as("state"), expr("(rank * w) div s").as("c"))
+        .groupBy(col("state")).agg(sum(col("c")).as("in_mass"))
+      base
+        .join(loop.hint(contribs, k * 24L), Seq("state"), "left")
+        .select(col("state"),
+          expr("teleport + (85L * coalesce(in_mass, 0L)) div 100L").as("rank"))
     }
     rank.orderBy(col("rank").desc, col("state").asc)
   }
@@ -605,9 +508,9 @@ object GraphRank {
     * localCheckpointed (bounded |V| rows) so the 8-round plan stays
     * shallow; the normalized view rides the next half-step's plan lazily
     * — it is one broadcast-scalar join over the checkpointed raw frame.
-    * The per-round joins carry NO broadcast hint (the [[labelPropagation]]
-    * doctrine): AQE broadcasts the |V|-row score frame from measured size
-    * and degrades to a shuffle-hash join on an unbounded vertex set.
+    * The |V|-row score frame is broadcast only when the measured |E| says
+    * it is small (the [[labelPropagation]] doctrine), and degrades to a
+    * shuffle-hash join on an unbounded vertex set.
     *
     * Returns the top `k` nodes by (authority desc, hub desc, node asc) —
     * a total order, so the limit is deterministic. Nodes with no in-edges
@@ -621,10 +524,11 @@ object GraphRank {
     // null sum = empty edge frame (legal: a sparse corpus can have zero
     // transitions — the r12 sparse-fuzz doctrine); 0 passes the guard and
     // the loop runs over empty frames to an empty score table; the same
-    // action reads |E| to size every loop frame's coalesce ([[ckParts]])
+    // action reads |E| to size every loop frame's coalesce ([[Fixpoint]])
     val head = e0.agg(count(lit(1)), sum(col("w"))).head()
     val totW = Option(head.getAs[java.lang.Long](1)).map(_.longValue).getOrElse(0L)
-    val p = ckParts(edges.sparkSession, head.getLong(0))
+    val loop = Fixpoint(edges.sparkSession, head.getLong(0))
+    val p = loop.parts
     val e = e0.coalesce(p)
     // divide twice instead of forming 2*scale: a caller-supplied
     // scale > Long.MaxValue/2 would wrap the product negative and let the
@@ -636,44 +540,37 @@ object GraphRank {
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node")))
       .distinct().coalesce(p).localCheckpoint()
-    // loop planning (see [[LoopPlan]]): static planning per round — AQE's
-    // per-exchange query-stage jobs made the 8-round loop ~140 driver
-    // barriers for ~1.6 s of task time — with the score-frame broadcast
-    // decided ONCE from the measured |E| (|V| ≤ 2|E|, ~24 B/row) instead
-    // of re-estimated per stage per round; oversize graphs degrade to
-    // shuffle joins on the ckParts-sized partitions, exactly as under AQE
-    var hub = nodes.select(col("node"), lit(scale).as("h"))
-    var auth = nodes.select(col("node"), lit(scale).as("a"))
     // KEEPS the score-frame broadcast hint even when pinned to one
     // partition (r17, measured): unlike the pagerank/CC loops, the edge
     // frame here is ~1.7 MB at sf0.1 and the unhinted single-partition
     // sort-merge join re-shuffles it TWICE per half-step — A/B 2.37 s
     // (hint) vs 2.85 s (no hint). The pin alone still trims the stage
-    // fan-out.
-    val pin = LoopPlan.pinnedParts(edges.sparkSession, p)
+    // fan-out. Score frames ≤ |V| ≤ 2|E| rows.
     def scoreB(df: DataFrame): DataFrame =
-      LoopPlan.broadcastIfSmall(df, 2L * head.getLong(0) * 24L)
-    LoopPlan.statically(edges.sparkSession, pin) {
-      for (_ <- 1 to iterations) {
-        val araw = e.join(scoreB(hub.withColumnRenamed("node", "src")), "src")
-          .select(col("dst").as("node"), (col("w") * col("h")).as("c"))
-          .groupBy(col("node")).agg(sum(col("c")).as("araw"))
-          .coalesce(p).localCheckpoint()
-        auth = nodes.join(scoreB(araw), Seq("node"), "left")
-          .crossJoin(broadcast(araw.agg(max(col("araw")).as("amax"))))
-          .select(col("node"),
-            coalesce(expr(s"araw div greatest(1L, amax div ${scale}L)"),
-              lit(0L)).as("a"))
-        val hraw = e.join(scoreB(auth.withColumnRenamed("node", "dst")), "dst")
-          .select(col("src").as("node"), (col("w") * col("a")).as("c"))
-          .groupBy(col("node")).agg(sum(col("c")).as("hraw"))
-          .coalesce(p).localCheckpoint()
-        hub = nodes.join(scoreB(hraw), Seq("node"), "left")
-          .crossJoin(broadcast(hraw.agg(max(col("hraw")).as("hmax"))))
-          .select(col("node"),
-            coalesce(expr(s"hraw div greatest(1L, hmax div ${scale}L)"),
-              lit(0L)).as("h"))
-      }
+      Fixpoint.broadcastIfSmall(df, 2L * head.getLong(0) * 24L)
+    // state (hub, auth): the raw half-step frames are checkpointed inside
+    // the round, and the normalized views over them stay lazy
+    val start = (nodes.select(col("node"), lit(scale).as("h")),
+      nodes.select(col("node"), lit(scale).as("a")))
+    val (hub, auth) = loop.run(start, iterations, stride = 1)(identity) { case ((h, _), _) =>
+      val araw = e.join(scoreB(h.withColumnRenamed("node", "src")), "src")
+        .select(col("dst").as("node"), (col("w") * col("h")).as("c"))
+        .groupBy(col("node")).agg(sum(col("c")).as("araw"))
+        .coalesce(p).localCheckpoint()
+      val a = nodes.join(scoreB(araw), Seq("node"), "left")
+        .crossJoin(broadcast(araw.agg(max(col("araw")).as("amax"))))
+        .select(col("node"),
+          coalesce(expr(s"araw div greatest(1L, amax div ${scale}L)"),
+            lit(0L)).as("a"))
+      val hraw = e.join(scoreB(a.withColumnRenamed("node", "dst")), "dst")
+        .select(col("src").as("node"), (col("w") * col("a")).as("c"))
+        .groupBy(col("node")).agg(sum(col("c")).as("hraw"))
+        .coalesce(p).localCheckpoint()
+      (nodes.join(scoreB(hraw), Seq("node"), "left")
+        .crossJoin(broadcast(hraw.agg(max(col("hraw")).as("hmax"))))
+        .select(col("node"),
+          coalesce(expr(s"hraw div greatest(1L, hmax div ${scale}L)"),
+            lit(0L)).as("h")), a)
     }
     nodes.join(auth, Seq("node")).join(hub, Seq("node"))
       .select(col("node"), col("a").as("authority"), col("h").as("hub"))

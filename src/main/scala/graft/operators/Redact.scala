@@ -30,12 +30,6 @@ object Redact {
   def redactAll(c: Column): Column =
     Patterns.foldLeft(c) { case (acc, (_, (re, tag))) => regexp_replace(acc, re, tag) }
 
-  /** Apply a single named pass. */
-  def redactOne(c: Column, name: String): Column = {
-    val (re, tag) = Patterns.toMap.apply(name)
-    regexp_replace(c, re, tag)
-  }
-
   /** Redaction profile over the events stream's raw `props` payload —
     * counts digit-run hits (the only PII-shaped content in this synthetic
     * corpus; the email/url/phone passes run too, proving out the full

@@ -512,7 +512,7 @@ object Similarity {
     val spark = corpus.sparkSession
     import spark.implicits._
     var cents = seedCentroids(corpus, numCells)
-    // NOT LoopPlan.statically (r16 A/B: static planning ran the kmeans
+    // NOT a [[Fixpoint]] loop (r16 A/B: static planning ran the kmeans
     // consumers SLOWER — q_ivf_kmeans_topk 1.49 vs 1.19 s, q_semdedup
     // 1.43 vs 0.86 s; the posexplode+two-level agg per round wants AQE's
     // partition coalescing, the BPE-train result again)
@@ -869,7 +869,7 @@ object Similarity {
       .coalesce(1).localCheckpoint()
     val rel = cands.select(col("query_id"), col("cand"), col("rel"))
     var selected: DataFrame = null
-    // NOT LoopPlan.statically (r16 A/B: 1.19 vs 1.04 s in AQE's favor —
+    // NOT a [[Fixpoint]] loop (r16 A/B: 1.19 vs 1.04 s in AQE's favor —
     // the per-round anti-join/agg shuffles want AQE coalescing)
     for (r <- 1 to k) {
       val rem = if (r == 1) rel

@@ -62,8 +62,8 @@ private[graft] object Spread {
 
   def byKey(df: DataFrame, key: Column*): DataFrame = {
     // GRAFT_SPREAD=0: dev-only A/B switch (disables every spread site) —
-    // lets a single build measure spread-on vs spread-off back-to-back
-    // (the GRAFT_LOOP_STATIC precedent); the driver never sets it
+    // lets a single build measure spread-on vs spread-off back-to-back;
+    // Verify and Bench never set it
     if (sys.env.get("GRAFT_SPREAD").contains("0")) return df
     if (isTiny(df)) df.repartition(df.sparkSession.sparkContext.defaultParallelism, key: _*)
     else df

@@ -660,8 +660,9 @@ object TextAnalysis {
     // markovStationary precedent (fewer, deeper checkpoints win when the
     // per-round frame is cheap to recompute); the rounds-vs-wall curve
     // lives in BENCH_bpe_rounds_r15.json.
-    val tinyTrain = Spread.isTiny(docs) // gates the per-round static argmax below
-    val ckStride = if (tinyTrain) 1 else 4
+    // a tiny train plans its 1-row per-round argmax statically (below)
+    val argmaxLoop = if (Spread.isTiny(docs)) Some(Fixpoint(docs.sparkSession, 1L)) else None
+    val ckStride = if (argmaxLoop.isDefined) 1 else 4
     val words = Spread.byKey(docs, col("doc_id")) // explode fan-out, no-op at scale
       .select(explode(filter(tokens(col("text")), t => length(t) > 0)).as("word"))
       .groupBy(col("word")).agg(count(lit(1)).as("freq"))
@@ -672,7 +673,7 @@ object TextAnalysis {
         col("freq"))
       .localCheckpoint()
     val merges = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    // NOT LoopPlan.statically (r16, measured): unlike the graph loops,
+    // NOT a [[Fixpoint]] loop (r16, measured): unlike the graph loops,
     // each BPE round runs several tiny-but-real shuffles whose partition
     // counts AQE coalesces to ~1; static planning left them at the session
     // default and the stride-replayed rounds multiplied that 32-way task
@@ -699,10 +700,8 @@ object TextAnalysis {
       // counter-example — static planning over the WHOLE loop at the
       // 32-way session default — stays reverted).
       val m0 = pairs.orderBy(col("c").desc, col("a").asc, col("b").asc).limit(1)
-      val m =
-        if (tinyTrain) LoopPlan.statically(docs.sparkSession, Some(1)) {
-          m0.localCheckpoint() // 1-row merge rule; feeds both rep' and the table
-        } else m0.localCheckpoint()
+      // 1-row merge rule; feeds both rep' and the table
+      val m = argmaxLoop.fold(m0.localCheckpoint())(_.scope(m0.localCheckpoint()))
       merges += m.select(lit(r.toLong).as("round"), col("a").as("pair_a"),
         col("b").as("pair_b"), concat(col("a"), col("b")).as("merged"),
         col("c").as("pair_count"))

@@ -14,8 +14,10 @@ import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
   *   dashboard   — KPIs → overwrite,          3 min trigger, update mode
   *
   * Improvements over the reference, kept semantics-preserving:
-  *  - awaitAnyTermination instead of awaiting only the first query (the
-  *    reference silently loses failures of the other three, :424).
+  *  - `start` returns all four queries, so a caller can wait on
+  *    `spark.streams.awaitAnyTermination()` instead of awaiting only the
+  *    first query (the reference silently loses failures of the other
+  *    three, :424).
   *  - the dashboard KPIs are a pure plan (no driver collect, §4 defect 3).
   *  - optional watermarked session aggregation bounds state (§4 defect 1);
   *    reference-parity unbounded mode remains the default.
@@ -190,8 +192,4 @@ object ClickstreamPipeline {
 
     Seq(land, sessions, hourly, dashboard)
   }
-
-  /** Run until any query terminates (fail-fast, unlike the reference). */
-  def awaitAny(spark: SparkSession): Unit =
-    spark.streams.awaitAnyTermination()
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Custom stateful sessionization via flatMapGroupsWithState (SURVEY.md T9:
@@ -102,19 +101,5 @@ object StatefulSessionizer {
             closed.result().iterator
           }
       }
-  }
-
-  /** Adapter: the driver's generic event stream → typed session events. */
-  def fromGenericEvents(stream: DataFrame): Dataset[Event] = {
-    val spark = stream.sparkSession
-    import spark.implicits._
-    stream.select(
-      col("user_id").cast("string").as("user_id"),
-      col("event_type"),
-      col("ts_sec"),
-      when(col("event_type") === "purchase", col("value")).otherwise(0.0)
-        .as("purchase_amount"),
-      timestamp_seconds(col("ts_sec")).as("event_time"))
-      .as[Event]
   }
 }

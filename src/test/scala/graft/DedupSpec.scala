@@ -256,7 +256,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("dedup clusters: explicit-aggregate fallback path matches the observation path") {
-    // ckptRoundsWithSums rides Observation metrics on the checkpoint job;
+    // dedupClusters rides Observation metrics on the checkpoint job;
     // if that contract ever breaks in an environment it falls back to one
     // checkpoint + aggregate per round, sticky per JVM. The fallback must
     // produce identical clusters (and the same cap-exhaustion throw).

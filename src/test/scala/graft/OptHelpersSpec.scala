@@ -7,9 +7,10 @@ import graft.sources.Tables
 
 /** Optimization-helper contracts (r17 verdict items 7/8): the Spread gate
   * must stay a no-op at scale — judged from BASE RELATION size, immune to
-  * post-filter CBO estimates — and LoopPlan's session-conf toggle must
-  * restore AQE under concurrency and exceptions. In the operators package
-  * because both helpers are private[graft]/private[operators]. */
+  * post-filter CBO estimates — and the Fixpoint runner's session-conf
+  * scope must restore AQE under concurrency and exceptions, and pin and
+  * hint only by its measured-rows rule. In the operators package because
+  * both helpers are private[graft]/private[operators]. */
 class OptHelpersSpec extends SparkSpec {
 
   private def withConf[A](key: String, value: String)(body: => A): A = {
@@ -46,22 +47,27 @@ class OptHelpersSpec extends SparkSpec {
     assert(logical.contains("RepartitionByExpression"), logical)
   }
 
-  test("LoopPlan.statically restores AQE under concurrent blocks and exceptions") {
+  test("Fixpoint.scope restores AQE and shuffle partitions under concurrent scopes and exceptions") {
     val key = "spark.sql.adaptive.enabled"
+    val pKey = "spark.sql.shuffle.partitions"
     assert(spark.conf.get(key) == "true", "precondition: session runs AQE on")
+    val parts = spark.conf.get(pKey)
+    val loop = Fixpoint(spark, 1L)
+    assume(loop.pin.contains(1), "needs a session with more than one core and partition")
     // exception path: the finally must restore
     intercept[RuntimeException] {
-      LoopPlan.statically(spark) { throw new RuntimeException("boom") }
+      loop.scope { throw new RuntimeException("boom") }
     }
     assert(spark.conf.get(key) == "true", "AQE must be restored after a throw")
-    // concurrency: N interleaved blocks must serialize (the lock) so the
+    assert(spark.conf.get(pKey) == parts, "shuffle partitions must be restored after a throw")
+    // concurrency: N interleaved scopes must serialize (the lock) so the
     // save/restore pairing can never race prev=false back into the session
     val errs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val threads = (1 to 8).map { i =>
       new Thread(() => {
-        try LoopPlan.statically(spark) {
-          if (spark.conf.get(key) != "false")
-            errs.add(s"thread $i: AQE not off inside statically")
+        try loop.scope {
+          if (spark.conf.get(key) != "false" || spark.conf.get(pKey) != "1")
+            errs.add(s"thread $i: AQE not off or partitions not pinned inside scope")
           Thread.sleep(10)
         } catch { case e: Throwable => errs.add(s"thread $i: $e") }
       })
@@ -69,7 +75,9 @@ class OptHelpersSpec extends SparkSpec {
     threads.foreach(_.start()); threads.foreach(_.join())
     assert(errs.isEmpty, errs.toString)
     assert(spark.conf.get(key) == "true",
-      "AQE must be restored after concurrent statically blocks")
+      "AQE must be restored after concurrent scopes")
+    assert(spark.conf.get(pKey) == parts,
+      "shuffle partitions must be restored after concurrent scopes")
   }
 
   test("broadcastIfSmall applies the thr/4 safety factor") {
@@ -78,9 +86,57 @@ class OptHelpersSpec extends SparkSpec {
     assume(thr > 0)
     val df = Tables.documents(spark, sf)
     // within thr/4: hinted (new frame); between thr/4 and thr: unhinted
-    assert(!(LoopPlan.broadcastIfSmall(df, thr / 4) eq df),
+    assert(!(Fixpoint.broadcastIfSmall(df, thr / 4) eq df),
       "estimate within thr/4 must hint broadcast")
-    assert(LoopPlan.broadcastIfSmall(df, thr / 4 + 1) eq df,
+    assert(Fixpoint.broadcastIfSmall(df, thr / 4 + 1) eq df,
       "estimate above thr/4 must keep the unhinted join (memory margin)")
+  }
+
+  test("Fixpoint pins nothing when the measured count reaches the cores, even below the session's partitions") {
+    val cores = spark.sparkContext.defaultParallelism
+    withConf("spark.sql.shuffle.partitions", (cores * 4).toString) {
+      val big = Fixpoint(spark, cores.toLong * 65536L)
+      assert(big.pin.isEmpty, s"a loop of >= cores x 64 Ki rows must not be pinned: ${big.pin}")
+      assert(big.parts == cores, "frame partitions stay clamped to the cores")
+      assert(Fixpoint(spark, cores.toLong * 65536L * 100L).pin.isEmpty)
+      if (cores > 1)
+        assert(Fixpoint(spark, 1L).pin.contains(1), "a tiny loop still pins to 1")
+    }
+  }
+
+  test("dedupClusters hints no broadcast in any round when the loop pins to one partition") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, ResolvedHint}
+    assume(Fixpoint(spark, 1L).pin.contains(1), "needs session partitions > 1")
+    // a 12-vertex chain: ~11 rounds, so several strides, each building its
+    // later rounds inside the static scope
+    val chain = (1L until 12L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
+    val hinted = new java.util.concurrent.atomic.AtomicInteger(0)
+    val executions = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+                             qe: org.apache.spark.sql.execution.QueryExecution,
+                             durationNs: Long): Unit = {
+        executions.incrementAndGet()
+        if (qe.analyzed.exists {
+              case h: ResolvedHint => h.hints.strategy.contains(BROADCAST)
+              case _ => false
+            }) hinted.incrementAndGet()
+      }
+      override def onFailure(funcName: String,
+                             qe: org.apache.spark.sql.execution.QueryExecution,
+                             exception: Exception): Unit = ()
+    }
+    org.apache.spark.ListenerBusDrain.drain(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    val cc = try {
+      val out = Dedup.dedupClusters(chain).as[(Long, Long)].collect()
+      org.apache.spark.ListenerBusDrain.drain(spark.sparkContext)
+      out
+    } finally spark.listenerManager.unregister(listener)
+    assert(cc.length == 12 && cc.forall(_._2 == 1L))
+    assert(executions.get > 3, s"expected the loop's executions to be observed: $executions")
+    assert(hinted.get == 0,
+      s"$hinted of $executions executions carried a broadcast hint")
   }
 }
