@@ -43,6 +43,10 @@ object GraftSession {
       // row-explosive operators, in pre-explosion repartitions
       // (Similarity.topKCosine doctrine) — not in a session knob.
       .config("spark.ui.enabled", "false")
+      // file: through both Hadoop routes without a chmod/readlink fork per
+      // checkpoint, state-store and sink file (see sources.NioRawLocalFileSystem)
+      .config("spark.hadoop.fs.file.impl", classOf[graft.sources.NioLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[graft.sources.NioLocalFs].getName)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // SQL-facing custom functions (fvec_dot / fvec_norm); on a cluster the

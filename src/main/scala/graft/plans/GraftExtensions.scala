@@ -14,37 +14,20 @@ import graft.plans.VectorExpressions.{FloatVectorDot, FloatVectorNorm, IntVector
   * plans the codegen'd expressions like any built-in.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  import GraftExtensions._
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction(dotDescriptor)
-    ext.injectFunction(normDescriptor)
-    ext.injectFunction(ivecDotDescriptor)
-    ext.injectFunction(bloomBuildDescriptor)
-    ext.injectFunction(bloomMightContainDescriptor)
-    ext.injectFunction(mgFrequentDescriptor)
+    GraftExtensions.functions.foreach(ext.injectFunction)
     ext.injectPlannerStrategy(_ => AsOfJoinStrategy)
   }
 }
 
 object GraftExtensions {
-  private def info(name: String, usage: String) =
-    new ExpressionInfo(classOf[VectorExpressions.type].getName, null, name, usage,
-      "", "", "", "", "", "", "built-in")
+  type Descriptor = (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)
 
-  val dotDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("fvec_dot"),
-      info("fvec_dot", "fvec_dot(a, b) - dot product of two float/double vectors as double"),
-      (exprs: Seq[Expression]) => FloatVectorDot(exprs(0), exprs(1)))
-
-  val normDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("fvec_norm"),
-      info("fvec_norm", "fvec_norm(a) - L2 norm of a float/double vector as double"),
-      (exprs: Seq[Expression]) => FloatVectorNorm(exprs(0)))
-
-  val ivecDotDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("ivec_dot"),
-      info("ivec_dot", "ivec_dot(a, b) - integer dot product of two int/long vectors as long"),
-      (exprs: Seq[Expression]) => IntVectorDot(exprs(0), exprs(1)))
+  private def fn(name: String, usage: String)(build: Seq[Expression] => Expression): Descriptor =
+    (FunctionIdentifier(name),
+      new ExpressionInfo(classOf[VectorExpressions.type].getName, null, name, usage,
+        "", "", "", "", "", "", "built-in"),
+      build)
 
   /** Sizing args must be literals (they shape the aggregation buffer). */
   private def litInt(e: Expression, what: String): Int = {
@@ -56,40 +39,26 @@ object GraftExtensions {
     }
   }
 
-  val bloomBuildDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("bloom_build"),
-      info("bloom_build", "bloom_build(keyHash, numBits, numHashes) - bloom filter of a long-hash key set as binary"),
-      (exprs: Seq[Expression]) => BloomBuildAggregate(exprs(0),
-        litInt(exprs(1), "numBits"), litInt(exprs(2), "numHashes")))
-
-  val bloomMightContainDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("bloom_might_contain"),
-      info("bloom_might_contain", "bloom_might_contain(bloom, keyHash) - membership probe, no false negatives"),
-      (exprs: Seq[Expression]) => BloomMightContain(exprs(0), exprs(1)))
-
-  val mgFrequentDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("mg_frequent"),
-      info("mg_frequent", "mg_frequent(key, capacity) - Misra-Gries candidate heavy keys as array<long>"),
-      (exprs: Seq[Expression]) => FrequentItemsAggregate(exprs(0), litInt(exprs(1), "capacity")))
+  /** Every SQL function, for both registration paths. */
+  val functions: Seq[Descriptor] = Seq(
+    fn("fvec_dot", "fvec_dot(a, b) - dot product of two float/double vectors as double")(
+      e => FloatVectorDot(e(0), e(1))),
+    fn("fvec_norm", "fvec_norm(a) - L2 norm of a float/double vector as double")(
+      e => FloatVectorNorm(e(0))),
+    fn("ivec_dot", "ivec_dot(a, b) - integer dot product of two int/long vectors as long")(
+      e => IntVectorDot(e(0), e(1))),
+    fn("bloom_build", "bloom_build(keyHash, numBits, numHashes) - bloom filter of a long-hash key set as binary")(
+      e => BloomBuildAggregate(e(0), litInt(e(1), "numBits"), litInt(e(2), "numHashes"))),
+    fn("bloom_might_contain", "bloom_might_contain(bloom, keyHash) - membership probe, no false negatives")(
+      e => BloomMightContain(e(0), e(1))),
+    fn("mg_frequent", "mg_frequent(key, capacity) - Misra-Gries candidate heavy keys as array<long>")(
+      e => FrequentItemsAggregate(e(0), litInt(e(1), "capacity"))))
 
   /** Register on an already-built session (temp-function registry +
     * experimental strategies). */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(
-      "fvec_dot", exprs => FloatVectorDot(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "fvec_norm", exprs => FloatVectorNorm(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "ivec_dot", exprs => IntVectorDot(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "bloom_build", exprs => BloomBuildAggregate(exprs(0),
-        litInt(exprs(1), "numBits"), litInt(exprs(2), "numHashes")), "built-in")
-    reg.createOrReplaceTempFunction(
-      "bloom_might_contain", exprs => BloomMightContain(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "mg_frequent", exprs => FrequentItemsAggregate(exprs(0),
-        litInt(exprs(1), "capacity")), "built-in")
+    functions.foreach { case (id, info, build) => reg.registerFunction(id, info, build) }
     org.apache.spark.sql.graft.bridge.addStrategy(spark, AsOfJoinStrategy)
   }
 }

@@ -23,10 +23,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Lifecycle contract: the result is COPIED out of the memory sink into a
   * local relation, the sink's temp view is dropped and its one-run
   * checkpoint deleted before returning — nothing accumulates in driver
-  * memory or on disk across invocations. Checkpoints live on tmpfs when
-  * available (/dev/shm): offset/commit-log and state-store file IO is the
-  * micro-batch latency floor, and these checkpoints are throwaways by
-  * construction (each run gets a fresh name). The whole run is serialized
+  * memory or on disk across invocations. Checkpoints live under
+  * `java.io.tmpdir` and are throwaways by construction (each run gets a
+  * fresh name). The whole run is serialized
   * on this object: the session-conf override around start() would race any
   * concurrent planner in the same session, so only one streaming oracle
   * query starts at a time (concurrent STREAMING execution belongs to
@@ -45,12 +44,6 @@ private[streaming] object MemorySinkRunner {
   private[streaming] var lastRunProgress: Seq[String] = Nil
   private[streaming] var captureProgress: Boolean = false
 
-  private def ckBase: Path = {
-    val shm = Paths.get("/dev/shm")
-    if (Files.isDirectory(shm) && Files.isWritable(shm)) shm
-    else Paths.get(System.getProperty("java.io.tmpdir"))
-  }
-
   // per-process root: two concurrent harness JVMs (a dev verify beside a
   // driver bench) must never see each other's offset logs — a structured
   // streaming query refuses to start over a foreign checkpoint. Lazily
@@ -58,9 +51,9 @@ private[streaming] object MemorySinkRunner {
   // crashed JVM with a since-reused pid left behind: per-run names restart
   // at _1 each process, so a foreign leftover under the same pid would
   // collide with our first run. The sweep beside it reaps siblings whose
-  // owning pid is dead — RAM-backed /dev/shm never reaps itself.
+  // owning pid is dead.
   private lazy val checkpointRoot: Path = {
-    val base = ckBase
+    val base = Paths.get(System.getProperty("java.io.tmpdir"))
     try {
       import scala.jdk.CollectionConverters._
       val kids = Files.list(base)
